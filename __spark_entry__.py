@@ -1700,11 +1700,9 @@ def q_pq_index_filtered_rerank(spark, sf):
     # artifacts cell-pruned like the production rerank. The oracle
     # replays assign/probe/encode, the label filter via the source
     # table, ADC over (probed AND filtered), top-100, exact rerank.
-    from external_benchmarks_spark.pipeline.pqindex import (
-        pq_index_filtered_rerank,
-    )
+    from external_benchmarks_spark.pipeline.pqindex import pq_index_rerank_topk
 
-    return pq_index_filtered_rerank(
+    return pq_index_rerank_topk(
         spark, _pq_index(spark, sf), QVEC,
         predicate=F.col("label").isin(1, 3),
         k=20, rerank=100, nprobe=IVF_NPROBE,

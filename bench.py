@@ -1694,7 +1694,7 @@ def main() -> None:
     # The FILTERED serving tier (r15, topk_rerank(where=...)): the
     # reference's actual read-SLA shape — filter + dot-product + LIMIT
     # (README.md:78-83) — served in-process as the pre-filter form,
-    # bit-identical to pq_index_filtered_rerank's Spark plan
+    # bit-identical to pq_index_rerank_topk(predicate=...)'s Spark plan
     # (parity-tested). Same median-of-3 protocol as its two siblings.
     pqf_p95s, pqf_p50s = [], []
     for _ in range(3):
@@ -1841,7 +1841,7 @@ def main() -> None:
         )
         ann_wall = time.perf_counter() - t0
     finally:
-        # match _drain's checkpoint-cleanup discipline: a streaming
+        # match _run's checkpoint-cleanup discipline: a streaming
         # exception re-raised by the server must not leak the request
         # dir into the temp dir (r14 ADVICE)
         shutil.rmtree(ann_req_dir, ignore_errors=True)

@@ -45,11 +45,6 @@ def md5_hash32_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT)"
 
 
-def md5_hash64_sql(expr: str) -> str:
-    """DuckDB SQL text computing the same value as ``md5_hash64``."""
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
 def minhash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for k universal hash fns a*x+b mod p.
 

@@ -30,7 +30,6 @@ Encoder tiers (selected at runtime):
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -266,13 +265,3 @@ def embed_fields(
         embed(F.coalesce(F.col(f), F.lit(""))) for f in fields if f in df.columns
     ]
     return df.select("*", F.concat(*vec_cols).alias("embedding"))
-
-
-def reembed_batch(pdf_iter: Iterator[pd.DataFrame], text_col: str, dim: int) -> Iterator[pd.DataFrame]:
-    """mapInPandas body for the upsert path: re-embed changed rows with the
-    encoder held once per task (streaming/upsert.py)."""
-    for pdf in pdf_iter:
-        mat = encode_batch(pdf[text_col], dim)
-        pdf = pdf.copy()
-        pdf["embedding"] = list(mat)
-        yield pdf

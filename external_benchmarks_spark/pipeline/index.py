@@ -254,12 +254,6 @@ def zorder_key(col_a, col_b, bits: int = 16):
     return z
 
 
-def read_index(spark, path: str) -> DataFrame:
-    """Read back the layout; partition columns come in as directory keys,
-    so equality predicates on them prune at planning time."""
-    return spark.read.parquet(path)
-
-
 def layout_pruning_report(
     path: str, column: str, lo, hi
 ) -> dict:

@@ -115,7 +115,8 @@ def ingest_products(
     count_records: bool = True,
 ) -> tuple[DataFrame, dict]:
     """The full arc. Returns (products_df, report) where report carries
-    ``staged_path``, ``n_records``, ``n_corrupt`` (quarantined raw
+    ``staged_path``, ``n_records`` (absent when ``count_records`` is
+    False, so a read of it fails fast), ``n_corrupt`` (quarantined raw
     lines), and ``n_unparsed_price``. When ``out_path`` is given the
     validated table also writes as parquet partitioned by
     ``main_category`` (the query-optimized layout of SURVEY.md §7.5).
@@ -190,9 +191,10 @@ def ingest_products(
     # fewer, same cache, same numbers (guide §1.2).
     report = {
         "staged_path": staged,
-        "n_records": products.count() if count_records else None,
         "n_corrupt": n_corrupt,
         "n_unparsed_price": n_unparsed_price,
     }
+    if count_records:
+        report["n_records"] = products.count()
     raw.unpersist()
     return products, report

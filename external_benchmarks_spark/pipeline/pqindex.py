@@ -118,13 +118,48 @@ def load_pq_index(root: str) -> PQIndex:
 
 
 def _index_fingerprint(
-    source_paths: Sequence[str] | None, params: dict, applied: list[str]
+    index: PQIndex, source_paths: Sequence[str] | None, applied: list[str]
 ) -> str:
     from external_benchmarks_spark.pipeline.layout import source_fingerprint
 
+    m, n_codes, _dsub = index.codebooks.shape
+    params = {
+        "n_codes": n_codes, "m": m,
+        "n_centroids": len(index.centroids), "metric": index.metric,
+        "payload_cols": sorted(index.payload_cols),
+    }
     return source_fingerprint(
         list(source_paths or []), extra={"pq": params, "applied": applied}
     )
+
+
+def _probe_cells(index: PQIndex, query, nprobe: int | None) -> list[int] | None:
+    """The nprobe cells a query probes (None = every cell), resolved
+    driver-side against the sidecar centroids."""
+    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
+
+    if nprobe is None:
+        return None
+    return [
+        int(c)
+        for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
+    ]
+
+
+def _prune(df: DataFrame, cells: list[int] | None) -> DataFrame:
+    """Keep only ``cells``: a ``centroid_id`` partition filter, so the
+    scan prunes cell DIRECTORIES at planning time."""
+    if cells is None:
+        return df
+    return df.filter(F.col("centroid_id").isin(cells))
+
+
+def _require_vectors(index: PQIndex) -> None:
+    if not index.has_vectors:
+        raise ValueError(
+            f"no raw-vector sidecar at {index.vectors_path}; "
+            "build_pq_index(..., store_vectors=True) to enable rerank"
+        )
 
 
 def build_pq_index(
@@ -191,18 +226,13 @@ def build_pq_index(
         root=root, centroids=centroids, codebooks=cb,
         metric=metric, key_col=key_col, payload_cols=tuple(payload_cols),
     )
-    params = {
-        "n_codes": n_codes, "m": m_subspaces,
-        "n_centroids": n_centroids, "metric": metric,
-        "payload_cols": sorted(payload_cols),
-    }
     build_index_layout(
         codes,
         index.codes_path,
         partition_col="centroid_id",
         sort_cols=[key_col],
         emb_col=None,
-        fingerprint=_index_fingerprint(source_paths, params, []),
+        fingerprint=_index_fingerprint(index, source_paths, []),
     )
     if store_vectors:
         build_index_layout(
@@ -251,7 +281,6 @@ def append_pq_index(
 
     if batch_id in _read_applied(index.root):
         return False
-    m, n_codes, _dsub = index.codebooks.shape
     assigned = ivf_assign(
         delta_df, index.centroids, emb_col=emb_col, metric=index.metric
     )
@@ -295,14 +324,9 @@ def append_pq_index(
         emb_col=None,
     )
     _record_applied(index.root, batch_id)
-    params = {
-        "n_codes": n_codes, "m": m,
-        "n_centroids": len(index.centroids), "metric": index.metric,
-        "payload_cols": sorted(index.payload_cols),
-    }
     record_layout(
         index.codes_path,
-        _index_fingerprint(source_paths, params, _read_applied(index.root)),
+        _index_fingerprint(index, source_paths, _read_applied(index.root)),
     )
     return True
 
@@ -325,15 +349,8 @@ def pq_index_topk(
     compressed corpus. ``nprobe=None`` scans every cell (exact ADC over
     the full code table)."""
     from external_benchmarks_spark.operators.quantize import pq_adc_topk
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
 
-    codes = pq_index_codes(spark, index)
-    if nprobe is not None:
-        cells = [
-            int(c)
-            for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
-        ]
-        codes = codes.filter(F.col("centroid_id").isin(cells))
+    codes = _prune(pq_index_codes(spark, index), _probe_cells(index, query, nprobe))
     return pq_adc_topk(codes, index.codebooks, query, k=k, key_col=index.key_col)
 
 
@@ -345,6 +362,7 @@ def pq_index_rerank_topk(
     rerank: int = 250,
     nprobe: int | None = None,
     emb_col: str = "embedding",
+    predicate=None,
 ) -> DataFrame:
     """ADC candidates + exact rerank against the PERSISTED index — the
     amortized twin of operators/quantize.pq_rerank_topk (FAISS
@@ -353,6 +371,18 @@ def pq_index_rerank_topk(
     (``store_vectors=True`` at build), and the final top-k comes from
     EXACT float64 dot products over those R rows only.
 
+    ``predicate`` (a Column over the index's payload_cols, e.g.
+    ``F.col("label").isin(1, 3)``) makes this the metadata-FILTERED
+    ANN read in the pre-filter form every production vector store
+    ships: it applies to the COMPRESSED scan before candidate
+    selection, so the ADC top-``rerank`` is the top-R *of the filtered
+    set* and the recall target is defined within the filter
+    (post-filtering top-R of the unfiltered set can return << k rows
+    under selective predicates — the classic filtered-ANN failure
+    mode). Payloads ride inside the codes layout, so the filter is a
+    parquet-pushed data filter on the cell-pruned compressed scan; the
+    source table is never touched at query time.
+
     Scale shape: the corpus pass reads m bytes/vector of nprobe cells;
     the exact stage touches R rows via a broadcast of the R-row
     candidate set against cell-directory-pruned raw vectors — R scales
@@ -360,33 +390,33 @@ def pq_index_rerank_topk(
     persisted index meets the reference's >90% recall bar
     (README.md:76) that pure ADC ranking cannot on flat-similarity
     data (measured: ADC-only 0.18-0.42 recall@50; candidate recall at
-    R=5k 1.0 — see pq_recall)."""
+    R=5k 1.0 — see pq_recall). Returns (key, score) ordered by
+    (-score, key): k rows, or as many as satisfy the predicate."""
     from external_benchmarks_spark.functions.vector import dot_product_literal
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
+    from external_benchmarks_spark.operators.quantize import pq_adc_topk
 
-    if not index.has_vectors:
-        raise ValueError(
-            f"no raw-vector sidecar at {index.vectors_path}; "
-            "build_pq_index(..., store_vectors=True) to enable rerank"
-        )
-    cand = pq_index_topk(spark, index, query, k=rerank, nprobe=nprobe).select(
-        index.key_col
-    )
-    vecs = spark.read.parquet(index.vectors_path)
-    if nprobe is not None:
-        # Every ADC candidate's cell is in the probed set by
-        # construction, so the same driver-resolved centroid_id filter
-        # the codes scan uses prunes the sidecar to nprobe cell
-        # DIRECTORIES at planning time. Without it the broadcast join
-        # on key_col (not the partition column) triggers no directory
-        # pruning and every rerank query scans the full O(corpus)
-        # float32 sidecar — invisible at sf0.1, the dominant IO at
-        # 100x (r13 verdict finding #4).
-        cells = [
-            int(c)
-            for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
-        ]
-        vecs = vecs.filter(F.col("centroid_id").isin(cells))
+    _require_vectors(index)
+    codes = pq_index_codes(spark, index)
+    if predicate is not None:
+        if not index.payload_cols:
+            raise ValueError(
+                "index carries no payload columns; "
+                "build_pq_index(..., payload_cols=[...]) to enable filtered reads"
+            )
+        codes = codes.filter(predicate)
+    # Every ADC candidate's cell is in the probed set by construction,
+    # so the same driver-resolved centroid_id filter prunes BOTH the
+    # codes and the sidecar to nprobe cell DIRECTORIES at planning
+    # time. Without it the broadcast join on key_col (not the
+    # partition column) triggers no directory pruning and every rerank
+    # query scans the full O(corpus) float32 sidecar — invisible at
+    # sf0.1, the dominant IO at 100x (r13 verdict finding #4).
+    cells = _probe_cells(index, query, nprobe)
+    cand = pq_adc_topk(
+        _prune(codes, cells), index.codebooks, query, k=rerank,
+        key_col=index.key_col,
+    ).select(index.key_col)
+    vecs = _prune(spark.read.parquet(index.vectors_path), cells)
     return (
         vecs.join(F.broadcast(cand), index.key_col)
         .select(
@@ -430,14 +460,9 @@ def pq_index_rerank_batch(
     single-query literal plan)."""
     from external_benchmarks_spark.functions.vector import dot_product
     from external_benchmarks_spark.operators.quantize import pq_adc_topk_batch
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
     from pyspark.sql.window import Window
 
-    if not index.has_vectors:
-        raise ValueError(
-            f"no raw-vector sidecar at {index.vectors_path}; "
-            "build_pq_index(..., store_vectors=True) to enable rerank"
-        )
+    _require_vectors(index)
     codes = pq_index_codes(spark, index)
     vecs = spark.read.parquet(index.vectors_path)
     # ONE driver collect of the bounded request batch, shared with the
@@ -446,20 +471,15 @@ def pq_index_rerank_batch(
     allowed = None
     if nprobe is not None:
         allowed = {
-            int(r[query_key]): [
-                int(c)
-                for c in ivf_probe_cells(
-                    index.centroids, r[query_emb], nprobe, index.metric
-                )
-            ]
+            int(r[query_key]): _probe_cells(index, r[query_emb], nprobe)
             for r in qrows
         }
         union_cells = sorted({c for cs in allowed.values() for c in cs})
         # ONE planning-time directory prune for both artifacts: every
         # query's candidates live in its probed cells, all of which are
         # in the union by construction
-        codes = codes.filter(F.col("centroid_id").isin(union_cells))
-        vecs = vecs.filter(F.col("centroid_id").isin(union_cells))
+        codes = _prune(codes, union_cells)
+        vecs = _prune(vecs, union_cells)
     cand = pq_adc_topk_batch(
         codes,
         index.codebooks,
@@ -493,69 +513,4 @@ def pq_index_rerank_batch(
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
         .select(query_key, index.key_col, "score", "rank")
-    )
-
-
-def pq_index_filtered_rerank(
-    spark: SparkSession,
-    index: PQIndex,
-    query: Sequence[float],
-    predicate,
-    k: int = 20,
-    rerank: int = 100,
-    nprobe: int | None = None,
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Metadata-FILTERED ANN over the persisted index — the pre-filter
-    form every production vector store ships: ``predicate`` (a Column
-    over the index's payload_cols, e.g. ``F.col("label").isin(1, 3)``)
-    applies to the COMPRESSED scan before candidate selection, so the
-    ADC top-``rerank`` is the top-R *of the filtered set* and the
-    recall target is defined within the filter (post-filtering top-R of
-    the unfiltered set can return << k rows under selective predicates
-    — the classic filtered-ANN failure mode this form avoids). The
-    exact rerank then joins the cell-pruned raw-vector sidecar exactly
-    like pq_index_rerank_topk.
-
-    Scale shape: payloads ride inside the codes layout (a few bytes
-    next to the m-byte codes), so the filter is a parquet-pushed data
-    filter on the already-cell-pruned compressed scan — the source
-    table is never touched at query time. Returns (key, score) ordered
-    by (-score, key), k rows or as many as satisfy the filter."""
-    from external_benchmarks_spark.functions.vector import dot_product_literal
-    from external_benchmarks_spark.operators.quantize import pq_adc_topk
-    from external_benchmarks_spark.operators.similarity import ivf_probe_cells
-
-    if not index.has_vectors:
-        raise ValueError(
-            f"no raw-vector sidecar at {index.vectors_path}; "
-            "build_pq_index(..., store_vectors=True) to enable rerank"
-        )
-    if not index.payload_cols:
-        raise ValueError(
-            "index carries no payload columns; "
-            "build_pq_index(..., payload_cols=[...]) to enable filtered reads"
-        )
-    codes = pq_index_codes(spark, index).filter(predicate)
-    vecs = spark.read.parquet(index.vectors_path)
-    if nprobe is not None:
-        cells = [
-            int(c)
-            for c in ivf_probe_cells(index.centroids, query, nprobe, index.metric)
-        ]
-        codes = codes.filter(F.col("centroid_id").isin(cells))
-        vecs = vecs.filter(F.col("centroid_id").isin(cells))
-    cand = pq_adc_topk(
-        codes, index.codebooks, query, k=rerank, key_col=index.key_col
-    ).select(index.key_col)
-    return (
-        vecs.join(F.broadcast(cand), index.key_col)
-        .select(
-            index.key_col,
-            dot_product_literal(
-                F.col(emb_col).cast("array<double>"), query
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(index.key_col))
-        .limit(k)
     )

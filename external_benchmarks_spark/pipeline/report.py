@@ -131,19 +131,18 @@ def dataset_report(
     # Caller-supplied single-row aggregates ride the SAME pass-1 scan
     # (guide §1.2: a caller that needs one more aggregate over this
     # frame should not pay a separate job for it). Values come back
-    # raw under report["extra"].
+    # raw under report["extra"]. Each alias derives from the caller's
+    # key alone, so an analysis error over a bad expression names it.
     extra_aggs = dict(extra_aggs or {})
-    for i, (_name, expr) in enumerate(extra_aggs.items()):
-        aggs.append(f"{expr} AS `__extra__{i}`")
+    extra = {name: f"__extra__{name}" for name in extra_aggs}
+    for name, alias in extra.items():
+        aggs.append(f"{extra_aggs[name]} AS `{alias.replace('`', '``')}`")
     one = df.selectExpr(*aggs).collect()[0]
 
     total = one["__total"]
     report = {"total_records": total, **report}
-    if extra_aggs:
-        report["extra"] = {
-            name: one[f"__extra__{i}"]
-            for i, name in enumerate(extra_aggs)
-        }
+    if extra:
+        report["extra"] = {name: one[alias] for name, alias in extra.items()}
     report["null_counts"] = {
         c: one[f"__null__{i}"] for i, c in enumerate(df.columns)
     }

@@ -24,12 +24,115 @@ partitions fall back to the Spark path, which keeps directory pruning.
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
 
 
-class VectorServingIndex:
+def _file_sig(d: str) -> tuple:
+    """(name, size) of every data file in directory ``d``; markers and
+    checksums (``_``/``.`` prefixes) are skipped. A changed signature is
+    how a reader sees a delta append or a compaction."""
+    return tuple(
+        sorted(
+            (f, os.path.getsize(os.path.join(d, f)))
+            for f in os.listdir(d)
+            if not f.startswith(("_", "."))
+        )
+    )
+
+
+def _read_arrays(d: str, key_col: str, list_col: str, extra=()):
+    """Read one partition directory as (table, ids, matrix): the
+    fixed-width ``list_col`` arrays flattened once and reshaped to
+    [rows, width] in their stored dtype (no re-encode)."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(d, columns=[key_col, list_col, *extra])
+    ids = np.asarray(tbl.column(key_col).to_numpy())
+    flat = tbl.column(list_col).combine_chunks().values.to_numpy(
+        zero_copy_only=False
+    )
+    n = len(tbl)
+    return tbl, ids, flat.reshape(n, len(flat) // max(n, 1))
+
+
+def _top_k(k: int, ids: list, scores: list, *extra: list) -> list:
+    """Merge per-partition candidates: concatenate each column and keep
+    the first ``k`` rows in (-score, id) order, the Spark query's exact
+    output order. Returns [ids, scores, *extra], reordered."""
+    if not ids:
+        return [np.empty(0, dtype=np.int64) for _ in (ids, scores, *extra)]
+    cols = [np.concatenate(c) for c in (ids, scores, *extra)]
+    order = np.lexsort((cols[0], -cols[1]))[:k]
+    return [c[order] for c in cols]
+
+
+class _PartitionedLayout:
+    """The ``{col}=<int>`` partition directories under ``root``, each
+    held in memory as ``_arrays[key] = (ids, matrix)``. Owns the
+    directory scan and the signature-gated refresh both serving indexes
+    share; a subclass supplies ``_read(key)``."""
+
+    def __init__(self, root: str, col: str):
+        self._root = root
+        self._col = col
+        self._arrays: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        # per-partition file signature: lets refresh() reload only the
+        # partitions a delta append / compaction touched
+        self._sigs: dict[int, tuple] = {}
+        for key in self._scan():
+            self._load(key)
+        if not self._arrays:
+            raise ValueError(f"no {col}=* directories under {root}")
+
+    def _scan(self) -> list[int]:
+        prefix = f"{self._col}="
+        return [
+            int(e.split("=", 1)[1])
+            for e in sorted(os.listdir(self._root))
+            if e.startswith(prefix)
+        ]
+
+    def _dir(self, key: int) -> str:
+        return os.path.join(self._root, f"{self._col}={key}")
+
+    def _read(self, key: int) -> tuple[np.ndarray, np.ndarray]:
+        raise NotImplementedError
+
+    def _load(self, key: int) -> None:
+        # Signature BEFORE the read: if a writer appends between the
+        # snapshot and the read, the stored signature is stale and the
+        # next refresh() reloads — at worst one redundant reload, never
+        # a permanently missed update (the TOCTOU otherwise possible
+        # under a concurrent appender).
+        sig = _file_sig(self._dir(key))
+        self._arrays[key] = self._read(key)
+        self._sigs[key] = sig
+
+    def _drop(self, key: int) -> None:
+        del self._arrays[key]
+        del self._sigs[key]
+
+    def _refresh(self, keys) -> list[int]:
+        """Reload ONLY the partitions whose on-disk file set changed,
+        plus new ones; drop removed ones. ``keys`` forces a reload of
+        those partitions. Returns the reloaded keys, ascending."""
+        on_disk = set(self._scan())
+        for gone in set(self._arrays) - on_disk:
+            self._drop(gone)
+        todo = set(keys) if keys is not None else on_disk
+        refreshed = []
+        for key in sorted(todo & on_disk):
+            if keys is None and self._sigs.get(key) == _file_sig(self._dir(key)):
+                continue
+            self._load(key)
+            refreshed.append(key)
+        return refreshed
+
+
+class VectorServingIndex(_PartitionedLayout):
     """In-memory filtered top-k over a ``partitionBy(label)`` parquet
     layout (the output of ``pipeline/index.build_index_layout`` or the
     bench's vtopk layout)."""
@@ -45,56 +148,17 @@ class VectorServingIndex:
         self.key_col = key_col
         self.emb_col = emb_col
         self.partition_col = partition_col
-        self.partitions: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        # per-partition file signature (name, size) — lets refresh()
-        # reload only the partitions a delta append / compaction touched
-        self._sigs: dict[int, tuple] = {}
-        prefix = f"{partition_col}="
-        for entry in sorted(os.listdir(layout_dir)):
-            if not entry.startswith(prefix):
-                continue
-            label = int(entry.split("=", 1)[1])
-            self._load_partition(label)
-        if not self.partitions:
-            raise ValueError(f"no {prefix}* directories under {layout_dir}")
+        super().__init__(layout_dir, partition_col)
 
-    def _part_dir(self, label: int) -> str:
-        return os.path.join(
-            self.layout_dir, f"{self.partition_col}={label}"
-        )
+    @property
+    def partitions(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+        return self._arrays
 
-    def _signature(self, label: int) -> tuple:
-        d = self._part_dir(label)
-        return tuple(
-            sorted(
-                (f, os.path.getsize(os.path.join(d, f)))
-                for f in os.listdir(d)
-                if not f.startswith(("_", "."))
-            )
-        )
-
-    def _load_partition(self, label: int) -> None:
-        import pyarrow.parquet as pq
-
-        # Signature BEFORE the read: if a writer appends between the
-        # snapshot and the read, the stored signature is stale and the
-        # next refresh() reloads — at worst one redundant reload, never
-        # a permanently missed update (the TOCTOU otherwise possible
-        # under a concurrent appender).
-        sig = self._signature(label)
-        tbl = pq.read_table(
-            self._part_dir(label), columns=[self.key_col, self.emb_col]
-        )
-        ids = tbl.column(self.key_col).to_numpy()
-        emb = tbl.column(self.emb_col).combine_chunks()
-        values = emb.values.to_numpy(zero_copy_only=False)
-        n = len(tbl)
-        dim = len(values) // max(n, 1)
+    def _read(self, label: int) -> tuple[np.ndarray, np.ndarray]:
+        _, ids, mat = _read_arrays(self._dir(label), self.key_col, self.emb_col)
         # float64 scoring matrix — same dtype promotion as the Spark
         # fast path (score_batch_udf does astype(float64) per batch)
-        mat = values.reshape(n, dim).astype(np.float64)
-        self.partitions[label] = (np.asarray(ids), mat)
-        self._sigs[label] = sig
+        return ids, mat.astype(np.float64)
 
     def refresh(self, labels=None) -> list[int]:
         """Incremental layout refresh: reload ONLY partitions whose
@@ -103,26 +167,7 @@ class VectorServingIndex:
         O(layout) — the serving-side completion of
         pipeline/index.append_to_index_layout. Pass ``labels`` to force
         specific partitions. Returns the reloaded labels."""
-        prefix = f"{self.partition_col}="
-        on_disk = {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(self.layout_dir)
-            if e.startswith(prefix)
-        }
-        for gone in set(self.partitions) - on_disk:
-            del self.partitions[gone]
-            del self._sigs[gone]
-        todo = set(labels) if labels is not None else on_disk
-        refreshed = []
-        for label in sorted(todo & on_disk):
-            if (
-                labels is None
-                and self._sigs.get(label) == self._signature(label)
-            ):
-                continue
-            self._load_partition(label)
-            refreshed.append(label)
-        return refreshed
+        return self._refresh(labels)
 
     def topk(
         self,
@@ -165,15 +210,11 @@ class VectorServingIndex:
                 ids, scores = ids[sel], scores[sel]
             best_ids.append(ids)
             best_scores.append(scores)
-        if not best_ids:
-            return []
-        ids = np.concatenate(best_ids)
-        scores = np.concatenate(best_scores)
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(ids[i]), float(scores[i])) for i in order]
+        ids, scores = _top_k(k, best_ids, best_scores)
+        return [(int(i), float(s)) for i, s in zip(ids, scores)]
 
 
-class PQServingIndex:
+class PQServingIndex(_PartitionedLayout):
     """ADC serving over a persisted PQ index (`pipeline/pqindex.py`):
     the compressed twin of :class:`VectorServingIndex`. Loads the
     cell-partitioned codes (``centroid_id=N`` directories) plus the
@@ -204,79 +245,40 @@ class PQServingIndex:
 
         self.index = load_pq_index(root)
         self.codes_dir = self.index.codes_path
-        self.cells: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         # payload columns (filtered-ANN metadata riding inside the
         # codes layout): cell -> {col: np.ndarray}, loaded with the
         # cell iff the index declares payload_cols
         self._payload: dict[int, dict] = {}
-        self._sigs: dict[int, tuple] = {}
         # rerank-path mmap cache: cell -> (sidecar signature, ids mmap,
         # float32 matrix mmap); signature-checked per touch, so sidecar
         # appends/compactions invalidate lazily without an explicit call
         self._vec_mm: dict[int, tuple] = {}
-        for entry in sorted(os.listdir(self.codes_dir)):
-            if entry.startswith("centroid_id="):
-                self._load_cell(int(entry.split("=", 1)[1]))
-        if not self.cells:
-            raise ValueError(f"no centroid_id=* directories under {self.codes_dir}")
+        super().__init__(self.codes_dir, "centroid_id")
 
-    def _cell_dir(self, cell: int) -> str:
-        return os.path.join(self.codes_dir, f"centroid_id={cell}")
+    @property
+    def cells(self) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+        return self._arrays
 
-    def _signature(self, cell: int) -> tuple:
-        d = self._cell_dir(cell)
-        return tuple(
-            sorted(
-                (f, os.path.getsize(os.path.join(d, f)))
-                for f in os.listdir(d)
-                if not f.startswith(("_", "."))
-            )
-        )
-
-    def _load_cell(self, cell: int) -> None:
-        import pyarrow.parquet as pq
-
-        sig = self._signature(cell)  # before the read — see exact tier
+    def _read(self, cell: int) -> tuple[np.ndarray, np.ndarray]:
         pcols = list(self.index.payload_cols)
-        tbl = pq.read_table(
-            self._cell_dir(cell),
-            columns=[self.index.key_col, "pq_codes", *pcols],
-        )
-        ids = tbl.column(self.index.key_col).to_numpy()
-        codes = tbl.column("pq_codes").combine_chunks()
-        m = self.index.codebooks.shape[0]
-        flat = codes.values.to_numpy(zero_copy_only=False)
-        self.cells[cell] = (
-            np.asarray(ids),
-            flat.reshape(len(tbl), m).astype(np.int64),
+        tbl, ids, codes = _read_arrays(
+            self._dir(cell), self.index.key_col, "pq_codes", pcols
         )
         if pcols:
             self._payload[cell] = {
                 c: np.asarray(tbl.column(c).to_numpy(zero_copy_only=False))
                 for c in pcols
             }
-        self._sigs[cell] = sig
+        return ids, codes.astype(np.int64)
+
+    def _drop(self, cell: int) -> None:
+        super()._drop(cell)
+        self._payload.pop(cell, None)
 
     def refresh(self, cells=None) -> list[int]:
         """Reload ONLY cells whose on-disk file set changed (ledgered
         append, compaction); drop removed, pick up new. O(dirty cells)."""
-        on_disk = {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(self.codes_dir)
-            if e.startswith("centroid_id=")
-        }
-        for gone in set(self.cells) - on_disk:
-            del self.cells[gone]
-            del self._sigs[gone]
-            self._payload.pop(gone, None)
-        todo = set(cells) if cells is not None else on_disk
-        refreshed = []
-        for cell in sorted(todo & on_disk):
-            if cells is None and self._sigs.get(cell) == self._signature(cell):
-                continue
-            self._load_cell(cell)
-            refreshed.append(cell)
-        return refreshed
+        return self._refresh(cells)
 
     def _filter_mask(self, cell: int, where: dict, n: int):
         """Conjunctive IN-list mask over the cell's payload columns —
@@ -296,37 +298,11 @@ class PQServingIndex:
             mask &= np.isin(pay[col], np.asarray(list(vals)))
         return mask
 
-    def topk(
-        self,
-        qvec,
-        k: int = 20,
-        nprobe: int | None = None,
-        where: dict | None = None,
-        _with_cells: bool = False,
-    ):
-        """Probed ADC top-k: nprobe cells resolve against the sidecar
-        centroids (same rule as operators/similarity.ivf_probe_cells),
-        scores are exact integer LUT sums, order (-pq_score, key) —
-        the Spark plan's exact output. Returns [(key, pq_score)].
-
-        ``where`` (r15) is the PRE-filter form of the filtered-ANN SLA
-        at serving: {payload_col: allowed values} conjunctive IN-lists
-        evaluated against the in-memory payload arrays BEFORE candidate
-        selection, so the top-k is the top-k of the (probed AND
-        filtered) set — the serving twin of
-        pipeline/pqindex.pq_index_filtered_rerank's codes-scan
-        predicate, bit-parity-tested. Post-filtering the unfiltered
-        top-k would return << k rows under selective predicates.
-
-        RECALL CONTRACT: this ranks by pure ADC — 0.18-0.42 recall@50
-        on flat-similarity data (measured, pq_recall entry). Use
-        :meth:`topk_rerank` where the reference's >90% recall bar
-        applies (README.md:76); this form is the compressed-ranking /
-        candidate-generation tier. ``_with_cells`` additionally
-        returns {cell: [candidate ids]} for the rerank sidecar reads."""
-        from external_benchmarks_spark.operators.similarity import (
-            ivf_probe_cells,
-        )
+    def _candidates(self, qvec, k: int, nprobe: int | None, where: dict | None):
+        """The prune stage both reads share: the probed, pre-filtered
+        ADC top-``k`` as (ids, pq_scores, cells) arrays in
+        (-pq_score, key) order."""
+        from external_benchmarks_spark.pipeline.pqindex import _probe_cells
 
         cb = self.index.codebooks
         m, n_codes, dsub = cb.shape
@@ -340,16 +316,11 @@ class PQServingIndex:
         lut = (
             np.floor((qsub * cb) * 1e6).astype(np.int64).sum(axis=2)
         )  # [m, n_codes]
-        if nprobe is not None:
-            probe = [
-                c
-                for c in ivf_probe_cells(
-                    self.index.centroids, qvec, nprobe, self.index.metric
-                )
-                if c in self.cells
-            ]
-        else:
+        probe = _probe_cells(self.index, qvec, nprobe)
+        if probe is None:
             probe = sorted(self.cells)
+        else:
+            probe = [c for c in probe if c in self.cells]
         best_ids: list[np.ndarray] = []
         best_scores: list[np.ndarray] = []
         best_cells: list[np.ndarray] = []
@@ -360,26 +331,39 @@ class PQServingIndex:
                 ids, codes = ids[mask], codes[mask]
             if len(ids) == 0:
                 continue
-            scores = lut[np.arange(m), codes].sum(axis=1)
             best_ids.append(ids)
-            best_scores.append(scores)
+            best_scores.append(lut[np.arange(m), codes].sum(axis=1))
             best_cells.append(np.full(len(ids), cell, dtype=np.int64))
-        if not best_ids:
-            return [] if not _with_cells else ([], {})
-        ids = np.concatenate(best_ids)
-        scores = np.concatenate(best_scores)
-        order = np.lexsort((ids, -scores))[:k]
-        if _with_cells:
-            cells_flat = np.concatenate(best_cells)
-            by_cell: dict[int, list[int]] = {}
-            for i in order:
-                by_cell.setdefault(int(cells_flat[i]), []).append(int(ids[i]))
-            return [(int(ids[i]), int(scores[i])) for i in order], by_cell
-        return [(int(ids[i]), int(scores[i])) for i in order]
+        return _top_k(k, best_ids, best_scores, best_cells)
 
-    @property
-    def _vec_root(self) -> str:
-        return os.path.join(os.path.dirname(self.codes_dir), "vectors")
+    def topk(
+        self,
+        qvec,
+        k: int = 20,
+        nprobe: int | None = None,
+        where: dict | None = None,
+    ) -> list[tuple[int, int]]:
+        """Probed ADC top-k: nprobe cells resolve against the sidecar
+        centroids (same rule as operators/similarity.ivf_probe_cells),
+        scores are exact integer LUT sums, order (-pq_score, key) —
+        the Spark plan's exact output. Returns [(key, pq_score)].
+
+        ``where`` (r15) is the PRE-filter form of the filtered-ANN SLA
+        at serving: {payload_col: allowed values} conjunctive IN-lists
+        evaluated against the in-memory payload arrays BEFORE candidate
+        selection, so the top-k is the top-k of the (probed AND
+        filtered) set — the serving twin of the codes-scan
+        ``predicate`` of pipeline/pqindex.pq_index_rerank_topk,
+        bit-parity-tested. Post-filtering the unfiltered top-k would
+        return << k rows under selective predicates.
+
+        RECALL CONTRACT: this ranks by pure ADC — 0.18-0.42 recall@50
+        on flat-similarity data (measured, pq_recall entry). Use
+        :meth:`topk_rerank` where the reference's >90% recall bar
+        applies (README.md:76); this form is the compressed-ranking /
+        candidate-generation tier."""
+        ids, scores, _ = self._candidates(qvec, k, nprobe, where)
+        return [(int(i), int(s)) for i, s in zip(ids, scores)]
 
     def _vec_cell(self, cell: int):
         """Memory-mapped (sorted ids, float32 matrix) for one sidecar
@@ -393,9 +377,7 @@ class PQServingIndex:
         Values are the sidecar's exact float32 bytes (no re-encode), so
         the parity contract survives the cache. The conversion is
         crash-safe (tmp + atomic rename, signature recorded after)."""
-        import json
-
-        d = os.path.join(self._vec_root, f"centroid_id={cell}")
+        d = os.path.join(self.index.vectors_path, f"centroid_id={cell}")
         if not os.path.isdir(d):
             # A cell present under codes/ but absent under vectors/ —
             # a pre-r14 append crashed between the two layouts, or a
@@ -408,19 +390,11 @@ class PQServingIndex:
                 np.empty(0, dtype=np.int64),
                 np.empty((0, 0), dtype=np.float32),
             )
-        sig = tuple(
-            sorted(
-                (f, os.path.getsize(os.path.join(d, f)))
-                for f in os.listdir(d)
-                if not f.startswith(("_", "."))
-            )
-        )
+        sig = _file_sig(d)
         cached = self._vec_mm.get(cell)
         if cached is not None and cached[0] == sig:
             return cached[1], cached[2]
-        cache_dir = os.path.join(
-            os.path.dirname(self.codes_dir), "_serving_vec_cache"
-        )
+        cache_dir = os.path.join(self.index.root, "_serving_vec_cache")
         os.makedirs(cache_dir, exist_ok=True)
         base = os.path.join(cache_dir, f"cell_{cell}")
         meta_p, ids_p, mat_p = base + ".json", base + ".ids.npy", base + ".mat.npy"
@@ -431,14 +405,7 @@ class PQServingIndex:
         except (OSError, ValueError, KeyError):
             pass
         if on_disk_sig != list(sig):
-            import pyarrow.parquet as pq
-
-            tbl = pq.read_table(d, columns=[self.index.key_col, "embedding"])
-            ids = tbl.column(self.index.key_col).to_numpy()
-            emb = tbl.column("embedding").combine_chunks()
-            vals = emb.values.to_numpy(zero_copy_only=False)
-            n = len(tbl)
-            mat = vals.reshape(n, len(vals) // max(n, 1))
+            _, ids, mat = _read_arrays(d, self.index.key_col, "embedding")
             order = np.argsort(ids, kind="stable")
             for path, arr in ((ids_p, ids[order]), (mat_p, mat[order])):
                 tmp = path + ".tmp.npy"
@@ -464,16 +431,15 @@ class PQServingIndex:
         """ADC top-``rerank`` -> EXACT re-score of those R rows -> top-k
         by exact score: the serving twin of
         pipeline/pqindex.pq_index_rerank_topk's Spark plan, bit-for-bit
-        (parity-tested in tests/test_pqindex.py). With ``where`` (r15)
-        it is the twin of pq_index_filtered_rerank instead: the
-        pre-filter applies to the ADC candidate stage, so the exact
-        top-k is the top-k WITHIN the filter — the reference's read-SLA
-        shape (filter + dot-product + LIMIT) served without a Spark
-        job. This is the tier that
-        meets the reference's >90% recall bar (README.md:76): pure ADC
-        ranking reads 0.18-0.42 recall@50 on flat-similarity data, but
-        the ADC top-R CONTAINS the true top-k, and the exact rerank
-        recovers it (recall >= 0.9 test-gated at serving).
+        (parity-tested in tests/test_pqindex.py). ``where`` (r15) is the
+        twin of that function's ``predicate``: the pre-filter applies to
+        the ADC candidate stage, so the exact top-k is the top-k WITHIN
+        the filter — the reference's read-SLA shape (filter +
+        dot-product + LIMIT) served without a Spark job. This is the
+        tier that meets the reference's >90% recall bar (README.md:76):
+        pure ADC ranking reads 0.18-0.42 recall@50 on flat-similarity
+        data, but the ADC top-R CONTAINS the true top-k, and the exact
+        rerank recovers it (recall >= 0.9 test-gated at serving).
 
         The raw vectors for the R candidates come from the index's
         cell-partitioned ``vectors`` sidecar (store_vectors=True at
@@ -485,22 +451,16 @@ class PQServingIndex:
         not pairwise), so every score is bit-identical to the Catalyst
         expression's. Returns [(key, exact_score)] ordered by
         (-score, key)."""
-        if not os.path.isdir(self._vec_root):
-            raise ValueError(
-                f"no raw-vector sidecar at {self._vec_root}; "
-                "build_pq_index(..., store_vectors=True) to enable rerank"
-            )
-        _cand, by_cell = self.topk(
-            qvec, k=rerank, nprobe=nprobe, where=where, _with_cells=True
-        )
-        if not by_cell:
-            return []
+        from external_benchmarks_spark.pipeline.pqindex import _require_vectors
+
+        _require_vectors(self.index)
+        cand_ids, _, cand_cells = self._candidates(qvec, rerank, nprobe, where)
         q = np.asarray([float(v) for v in qvec], dtype=np.float64)
         all_ids: list[np.ndarray] = []
         all_scores: list[np.ndarray] = []
-        for cell, cand_ids in sorted(by_cell.items()):
-            ids_mm, mat_mm = self._vec_cell(cell)
-            cand = np.asarray(cand_ids, dtype=np.int64)
+        for cell in np.unique(cand_cells):
+            ids_mm, mat_mm = self._vec_cell(int(cell))
+            cand = cand_ids[cand_cells == cell]
             pos = np.searchsorted(ids_mm, cand)
             ok = pos < len(ids_mm)
             pos, cand = pos[ok], cand[ok]
@@ -512,12 +472,7 @@ class PQServingIndex:
             # per-element products then SEQUENTIAL left-to-right sum:
             # cumsum materializes every prefix, forcing the exact
             # ((t0+t1)+t2)+... float64 order dot_product_literal emits
-            scores = np.cumsum(rows * q[None, :], axis=1)[:, -1]
             all_ids.append(cand)
-            all_scores.append(scores)
-        if not all_ids:
-            return []
-        ids = np.concatenate(all_ids)
-        scores = np.concatenate(all_scores)
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(ids[i]), float(scores[i])) for i in order]
+            all_scores.append(np.cumsum(rows * q[None, :], axis=1)[:, -1])
+        ids, scores = _top_k(k, all_ids, all_scores)
+        return [(int(i), float(s)) for i, s in zip(ids, scores)]

@@ -52,13 +52,31 @@ def _percentiles(xs: list[float]) -> dict:
     }
 
 
-def _drain(q, ckpt: str, duration_s: float | None) -> None:
-    """Shared drain + teardown for every server loop in this module:
-    poll for ``duration_s`` (or await an availableNow drain when None),
-    then ALWAYS stop the query and remove its checkpoint — the rmtree
-    sits in its own finally so a failed query (awaitTermination
-    re-raises the streaming exception) cannot leak the checkpoint dir
-    in the temp dir."""
+def _rate(spark, qps: int):
+    """A ``rate`` readStream: ``qps`` rows/sec of (timestamp, value)."""
+    return spark.readStream.format("rate").option("rowsPerSecond", qps).load()
+
+
+def _every(ms: int) -> dict:
+    return {"processingTime": f"{ms} milliseconds"}
+
+
+def _run(stream_df, handle, trigger: dict, duration_s: float | None) -> None:
+    """The one server loop of this module: start ``stream_df`` into
+    ``foreachBatch(handle)`` under a fresh temp checkpoint, poll for
+    ``duration_s`` (or await an availableNow drain when None), then
+    ALWAYS stop the query and remove its checkpoint. The rmtree sits in
+    its own finally, so a failed query (awaitTermination re-raises the
+    streaming exception) cannot leak the checkpoint dir."""
+    ckpt = os.path.join(
+        tempfile.gettempdir(), f"ebs_qserver_ckpt_{uuid.uuid4().hex[:8]}"
+    )
+    q = (
+        stream_df.writeStream.foreachBatch(handle)
+        .trigger(**trigger)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
     try:
         if duration_s is None:
             q.awaitTermination()  # availableNow: stops when drained
@@ -112,16 +130,7 @@ def _serve_stream(
             if results is not None and "req_id" in d:
                 results[seq] = out
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"ebs_qserver_ckpt_{uuid.uuid4().hex[:8]}"
-    )
-    q = (
-        stream_df.writeStream.foreachBatch(handle)
-        .trigger(**trigger)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    _drain(q, ckpt, duration_s)
+    _run(stream_df, handle, trigger, duration_s)
     return service, e2e
 
 
@@ -138,17 +147,13 @@ def run_rate_server(
     """Load-generating form: a ``rate`` readStream at ``qps`` rows/sec
     feeds the serving loop for ``duration_s``. Requests cycle through
     the four selectivity templates x ``n_labels`` partitions."""
-    sidx = VectorServingIndex(layout_dir)
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", qps).load()
-    )
     service, e2e = _serve_stream(
-        stream,
-        sidx,
+        _rate(spark, qps),
+        VectorServingIndex(layout_dir),
         qvec,
         k,
         n_labels,
-        {"processingTime": f"{trigger_ms} milliseconds"},
+        _every(trigger_ms),
         duration_s,
     )
     return {
@@ -187,19 +192,7 @@ def rate_delivery_floor(
         for r in rows:
             lat.append(max(0.0, now - r["timestamp"].timestamp()))
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"ebs_qfloor_ckpt_{uuid.uuid4().hex[:8]}"
-    )
-    q = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", qps)
-        .load()
-        .writeStream.foreachBatch(handle)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    _drain(q, ckpt, duration_s)
+    _run(_rate(spark, qps), handle, _every(trigger_ms), duration_s)
     return _percentiles(lat)
 
 
@@ -260,19 +253,7 @@ def run_ann_rate_server(
             ts = r["timestamp"].timestamp()
             e2e.append((ts, max(0.0, time.time() - ts)))
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"ebs_annrate_ckpt_{uuid.uuid4().hex[:8]}"
-    )
-    q = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", qps)
-        .load()
-        .writeStream.foreachBatch(handle)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    _drain(q, ckpt, duration_s)
+    _run(_rate(spark, qps), handle, _every(trigger_ms), duration_s)
     wall = max(time.time() - t_start, 1e-9)
     mid = min((ts for ts, _ in e2e), default=0.0) + (
         (max((ts for ts, _ in e2e), default=0.0)
@@ -349,20 +330,10 @@ def run_ann_file_server(
         if on_batch_done is not None:
             on_batch_done(int(_batch_id), batch_reqs)
 
-    ckpt = os.path.join(
-        tempfile.gettempdir(), f"ebs_annsrv_ckpt_{uuid.uuid4().hex[:8]}"
-    )
     reader = spark.readStream.schema("req_id bigint, k int, rerank int")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    q = (
-        reader.parquet(request_dir)
-        .writeStream.foreachBatch(handle)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    _drain(q, ckpt, None)
+    _run(reader.parquet(request_dir), handle, {"availableNow": True}, None)
     return results
 
 
@@ -378,15 +349,13 @@ def run_file_server(
     availableNow trigger and return {req_id: topk result} — the form
     the live test uses to assert bit-parity with direct serving calls.
     """
-    sidx = VectorServingIndex(layout_dir)
-    stream = (
-        spark.readStream.schema("req_id bigint, label int, key_mod_code int")
-        .parquet(request_dir)
-    )
+    stream = spark.readStream.schema(
+        "req_id bigint, label int, key_mod_code int"
+    ).parquet(request_dir)
     results: dict[int, list] = {}
     _serve_stream(
         stream,
-        sidx,
+        VectorServingIndex(layout_dir),
         qvec,
         k,
         n_labels=1,

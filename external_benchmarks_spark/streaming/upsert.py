@@ -334,18 +334,11 @@ class UpsertTable:
         """Commit a :meth:`prepare`d batch under the writer lease."""
         with self._writer_lease("upsert"):
             self._upsert_impl(
-                prepared["updates"],
-                prepared["evolve"],
-                _pre=prepared["small"],
+                prepared["updates"], prepared["evolve"], prepared["small"]
             )
 
-    _UNPREPARED = object()
-
     def _upsert_impl(
-        self,
-        updates: DataFrame,
-        evolve_schema: bool = False,
-        _pre=_UNPREPARED,
+        self, updates: DataFrame, evolve_schema: bool, small
     ) -> None:
         """MERGE semantics: delete matching keys, insert all update rows.
         Last-writer-wins within a batch by highest ``op_ts`` if present.
@@ -362,12 +355,10 @@ class UpsertTable:
         delete-key set all come out of the single collect; the base-bucket
         schema is cached on the instance after the first MERGE so later
         MERGEs skip parquet footer inference (a per-job driver cost that
-        dominated the 100-row-batch latency)."""
-        small = (
-            self._small_batch(updates)
-            if _pre is UpsertTable._UNPREPARED
-            else _pre
-        )
+        dominated the 100-row-batch latency).
+
+        ``small`` is :meth:`prepare`'s ``_small_batch`` result: the
+        collected batch, or None when it exceeds the threshold."""
         if small is not None:
             upd, touched, key_vals = small
             inline_keys = True

@@ -97,3 +97,21 @@ def test_ingest_restage_is_noop(spark, tmp_path):
     m1 = os.path.getmtime(p1)
     p2 = stage_dataset(url, d)
     assert p1 == p2 and os.path.getmtime(p2) == m1
+
+
+def test_ingest_without_count_omits_n_records(spark, tmp_path):
+    """count_records=False skips the count, so the report carries no
+    n_records at all (a read fails fast) instead of a None."""
+    from external_benchmarks_spark.pipeline.ingest import ingest_products
+
+    src = str(tmp_path / "raw_meta.jsonl.gz")
+    _write_fixture_gz(src, n=4)
+    products, report = ingest_products(
+        spark, "file://" + src, str(tmp_path / "stage"), "Books", dim=8,
+        count_records=False,
+    )
+    try:
+        assert "n_records" not in report
+        assert report["n_corrupt"] == 1
+    finally:
+        products.unpersist()

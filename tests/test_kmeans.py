@@ -149,3 +149,23 @@ def test_kmeans_empty_input(spark):
     df = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
     cents, prof = kmeans_refine(df, k=4, n_iter=2)
     assert cents.count() == 0 and prof.count() == 0
+
+
+def test_assign_rejects_non_contiguous_cids(spark):
+    """`_assign` numbers clusters by list position, so a centroid table
+    whose cids are not 0..k-1 must raise rather than come back silently
+    re-keyed (cid 2 reported as 1)."""
+    import pytest
+
+    from external_benchmarks_spark.operators.kmeans import (
+        _assign,
+        quantize_vectors,
+    )
+
+    v = quantize_vectors(_planted(spark))
+    cents = spark.createDataFrame(
+        [(0, [1000000, 0, 0, 0]), (2, [0, 1000000, 0, 0])],
+        "cid INT, ci ARRAY<BIGINT>",
+    )
+    with pytest.raises(ValueError, match="0..k-1"):
+        _assign(v, cents)

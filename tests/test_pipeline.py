@@ -110,6 +110,26 @@ def test_dataset_report_and_consistency(spark, sf_dir):
     assert chk["consistent"] is True
 
 
+def test_dataset_report_extra_aggs_keyed_by_name(spark):
+    """Each extra aggregate's alias comes from the caller's key: values
+    come back under that key (backticks included), and an expression
+    Catalyst rejects is named by its key in the error."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    df = spark.range(10).withColumnRenamed("id", "n")
+    rep = dataset_report(
+        df, numeric_cols=["n"], cat_cols=[],
+        extra_aggs={"max`n": "max(n)", "sum n": "sum(n)"},
+    )
+    assert rep["extra"] == {"max`n": 9, "sum n": 45}
+    with pytest.raises(AnalysisException, match="__extra__n_cents"):
+        dataset_report(
+            df, numeric_cols=["n"], cat_cols=[],
+            extra_aggs={"n_cents": "n * 100"},
+        )
+
+
 def test_dataset_report_fused_two_jobs_and_parity(spark, sf_dir):
     """The fused dataset_report runs exactly TWO driver actions for
     string-categorical inputs (one all-statistics agg + one

@@ -510,13 +510,13 @@ def filtered_index(spark):
 
 
 def test_filtered_rerank_is_prefilter_not_postfilter(spark, filtered_index):
-    """With rerank >= the filtered-set size, pq_index_filtered_rerank
+    """With rerank >= the filtered-set size, pq_index_rerank_topk(predicate=)
     must return EXACTLY the brute-force within-filter top-k — the
     defining property of the pre-filter form. A post-filter
     implementation (top-R of the unfiltered set, then filter) drops
     in-filter rows whose ADC rank falls outside R and fails this."""
     from external_benchmarks_spark.pipeline.pqindex import (
-        pq_index_filtered_rerank,
+        pq_index_rerank_topk,
     )
 
     emb = _emb(spark)
@@ -534,7 +534,7 @@ def test_filtered_rerank_is_prefilter_not_postfilter(spark, filtered_index):
     want = [int(ids[i]) for i in order]
     got = [
         r.vec_id
-        for r in pq_index_filtered_rerank(
+        for r in pq_index_rerank_topk(
             spark, filtered_index, QVEC,
             predicate=F.col("label").isin(1, 3),
             k=10, rerank=len(rows), nprobe=None,
@@ -551,14 +551,14 @@ def test_filtered_rerank_selective_predicate_returns_in_filter_rows(
     filter, never an error. The classic post-filter failure mode is
     returning << the available in-filter rows."""
     from external_benchmarks_spark.pipeline.pqindex import (
-        pq_index_filtered_rerank,
+        pq_index_rerank_topk,
     )
 
     emb = _emb(spark)
     few = emb.filter(F.col("label") == 7).select("vec_id").collect()
     n_few = len(few)
     assert 0 < n_few  # fixture data has every label
-    out = pq_index_filtered_rerank(
+    out = pq_index_rerank_topk(
         spark, filtered_index, QVEC,
         predicate=F.col("label") == 7,
         k=n_few + 25, rerank=n_few + 50, nprobe=None,
@@ -575,11 +575,11 @@ def test_filtered_rerank_plan_prunes_and_prefilters(spark, filtered_index):
     ADC candidate selection, at the parquet reader, not against the
     source table and not after the top-R limit."""
     from external_benchmarks_spark.pipeline.pqindex import (
-        pq_index_filtered_rerank,
+        pq_index_rerank_topk,
     )
 
     plan = (
-        pq_index_filtered_rerank(
+        pq_index_rerank_topk(
             spark, filtered_index, QVEC,
             predicate=F.col("label").isin(1, 3),
             k=10, rerank=60, nprobe=2,
@@ -599,11 +599,11 @@ def test_filtered_rerank_plan_prunes_and_prefilters(spark, filtered_index):
 
 def test_filtered_rerank_requires_payload_cols(spark, rerank_index):
     from external_benchmarks_spark.pipeline.pqindex import (
-        pq_index_filtered_rerank,
+        pq_index_rerank_topk,
     )
 
     with pytest.raises(ValueError, match="payload"):
-        pq_index_filtered_rerank(
+        pq_index_rerank_topk(
             spark, rerank_index, QVEC,
             predicate=F.col("label") == 1, k=5,
         )
@@ -613,12 +613,12 @@ def test_serving_filtered_rerank_bit_parity_with_spark_plan(
     spark, filtered_index
 ):
     """topk_rerank(where=...) answers bit-identically to
-    pq_index_filtered_rerank — probed and full-scan, a broad and a
+    pq_index_rerank_topk(predicate=) — probed and full-scan, a broad and a
     selective (< k in-filter rows) predicate. Parity transfers the
     Spark side's prefilter-not-postfilter and within-filter-rows
     properties to the serving tier (r15)."""
     from external_benchmarks_spark.pipeline.pqindex import (
-        pq_index_filtered_rerank,
+        pq_index_rerank_topk,
     )
     from external_benchmarks_spark.serving import PQServingIndex
 
@@ -631,7 +631,7 @@ def test_serving_filtered_rerank_bit_parity_with_spark_plan(
         for nprobe in (3, None):
             want = [
                 (r.vec_id, r.score)
-                for r in pq_index_filtered_rerank(
+                for r in pq_index_rerank_topk(
                     spark, filtered_index, QVEC, predicate=pred,
                     k=k, rerank=rerank, nprobe=nprobe,
                 ).collect()
@@ -648,7 +648,7 @@ def test_serving_filtered_parity_survives_append_refresh(spark):
     filtered answers stay bit-identical to the Spark plan over the
     mixed (base + delta) file sets."""
     from external_benchmarks_spark.pipeline.pqindex import (
-        pq_index_filtered_rerank,
+        pq_index_rerank_topk,
     )
     from external_benchmarks_spark.serving import PQServingIndex
 
@@ -666,7 +666,7 @@ def test_serving_filtered_parity_survives_append_refresh(spark):
         srv.refresh()
         want = [
             (r.vec_id, r.score)
-            for r in pq_index_filtered_rerank(
+            for r in pq_index_rerank_topk(
                 spark, idx, QVEC, predicate=F.col("label").isin(1, 3),
                 k=10, rerank=60, nprobe=None,
             ).collect()

@@ -149,6 +149,76 @@ def test_serving_incremental_refresh_only_dirty_cells(spark, sf_dir, tmp_path):
     assert idx.topk(q, k=20, label=0) == fresh.topk(q, k=20, label=0)
 
 
+def _write_part(d, ids, list_col, row):
+    import pandas as pd
+
+    d.mkdir(parents=True, exist_ok=True)
+    pd.DataFrame({"vec_id": ids, list_col: [row(i) for i in ids]}).to_parquet(
+        d / f"part-{len(os.listdir(d))}.parquet"
+    )
+
+
+def _exact_layout(root):
+    """(write(key, ids), partition dir of key, open()) for a
+    label-partitioned exact layout."""
+    part = lambda key: root / f"label={key}"
+    write = lambda key, ids: _write_part(
+        part(key), ids, "embedding", lambda i: [float(i), 1.0]
+    )
+    return write, part, lambda: VectorServingIndex(str(root))
+
+
+def _pq_layout(root):
+    """(write(key, ids), partition dir of key, open()) for a
+    hand-written one-subspace, two-code PQ index."""
+    import json
+
+    from external_benchmarks_spark.serving import PQServingIndex
+
+    root.mkdir(parents=True)
+    (root / "_pq_meta.json").write_text(json.dumps({
+        "metric": "cosine", "key_col": "vec_id", "payload_cols": [],
+        "centroids": [[1.0, 0.0], [0.0, 1.0]],
+        "codebooks": [[[1.0, 0.0], [0.0, 1.0]]],
+    }))
+    part = lambda key: root / "codes" / f"centroid_id={key}"
+    write = lambda key, ids: _write_part(
+        part(key), ids, "pq_codes", lambda i: [i % 2]
+    )
+    return write, part, lambda: PQServingIndex(str(root))
+
+
+@pytest.mark.parametrize("make", [_exact_layout, _pq_layout], ids=["exact", "pq"])
+def test_serving_refresh_drops_adds_and_forces(tmp_path, make):
+    """Both serving indexes share one refresh: a deleted partition
+    directory is dropped, a new one is picked up, an unchanged one is
+    left alone, and a forced refresh([key]) reloads exactly that key."""
+    import shutil
+
+    write, part, open_index = make(tmp_path / "idx")
+    for key, ids in ((0, [1, 2]), (1, [3]), (2, [4, 5])):
+        write(key, ids)
+    idx = open_index()
+    arrays = idx.partitions if isinstance(idx, VectorServingIndex) else idx.cells
+    held = lambda: {k: sorted(ids.tolist()) for k, (ids, _) in arrays.items()}
+    assert held() == {0: [1, 2], 1: [3], 2: [4, 5]}
+
+    shutil.rmtree(part(1))
+    write(3, [6, 7])
+    assert idx.refresh() == [3]
+    assert held() == {0: [1, 2], 2: [4, 5], 3: [6, 7]}
+    assert sorted(key for key, _ in idx.topk([1.0, 0.5], k=10)) == [
+        1, 2, 4, 5, 6, 7
+    ]
+
+    before = dict(arrays)
+    assert idx.refresh([2]) == [2]
+    assert arrays[2] is not before[2]
+    assert all(arrays[k] is before[k] for k in (0, 3))
+    assert held() == {0: [1, 2], 2: [4, 5], 3: [6, 7]}
+    assert idx.refresh() == []
+
+
 def test_file_stream_query_server_bit_parity(spark, layout, tmp_path):
     """The streaming query server (rate/file readStream -> foreachBatch
     -> serving index) must answer every request bit-identically to a

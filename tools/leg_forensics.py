@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Fresh-session best-rep forensics for bench legs flagged across rounds.
 
-Generalizes tools/pq_wobble.py (which covered the r11/r12 PQ four) to
-any registry leg: one fresh SparkSession, Arrow-worker warmup, a
+Works on any registry leg (it replaced a probe that covered only the
+r11/r12 PQ four): one fresh SparkSession, Arrow-worker warmup, a
 fixed-work pure-JVM host-control probe BEFORE and AFTER the legs (so a
 stall window indicts itself), then per leg 1 cold + N warm reps.
 

@@ -564,14 +564,14 @@ def main() -> None:
         # resident payloads, so serving should stay FLAT as the corpus
         # decades up while nprobe/cells holds the probed row count.
         from external_benchmarks_spark.pipeline.pqindex import (
-            pq_index_filtered_rerank,
+            pq_index_rerank_topk,
         )
         from external_benchmarks_spark.serving import PQServingIndex
 
         freps = []
         for _ in range(3):
             t0 = time.perf_counter()
-            pq_index_filtered_rerank(
+            pq_index_rerank_topk(
                 spark, idx, em.QVEC, predicate=F.col("label").isin(1, 3),
                 k=20, rerank=100, nprobe=4,
             ).count()
